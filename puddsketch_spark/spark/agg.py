@@ -39,7 +39,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..core.uddsketch import UDDSketch
+from ..core.ddsketch import DDSketchPair
+from ..core.uddsketch import MIN_ADDRESSABLE, UDDSketch
 
 __all__ = [
     "dd_bucket_counts",
@@ -55,6 +56,7 @@ __all__ = [
     "sketch_global",
     "quantile_table",
     "udds_quantiles",
+    "udds_sketch_global_jvm",
 ]
 
 # A sketch kernel is anything with: update(np.ndarray)->self, merge(other)->self,
@@ -62,26 +64,39 @@ __all__ = [
 # num_buckets / num_collapses (companion sketches report 0 collapses).
 SketchFactory = Callable[[], object]
 
-_METRIC_FIELDS = [
+# merged-state table: group..., state, n, buckets, collapses, num_partials;
+# a partial row carries its partition_id in the last slot instead
+_STATE_FIELDS = [
     StructField("state", BinaryType(), False),
     StructField("n", LongType(), False),
     StructField("buckets", IntegerType(), False),
     StructField("collapses", IntegerType(), False),
-    StructField("partition_id", IntegerType(), False),
+    StructField("num_partials", IntegerType(), False),
 ]
+_METRIC_FIELDS = _STATE_FIELDS[:-1] + [StructField("partition_id", IntegerType(), False)]
 
 
 def _metrics_of(sk) -> tuple[int, int, int]:
+    # a DDSketchPair also counts its ddog pair folds as collapses
     return (
         int(getattr(sk, "count", 0)),
         int(getattr(sk, "num_buckets", 0)),
-        int(getattr(sk, "num_collapses", 0)),
+        int(getattr(sk, "num_collapses", 0)) + int(getattr(sk, "pair_collapses", 0)),
     )
 
 
-def _partial_schema(df: DataFrame, group_cols: Sequence[str]) -> StructType:
+def _group_fields(df: DataFrame, group_cols: Sequence[str]) -> list[StructField]:
+    # in group_cols order: the stages below emit key values in that order
     by_name = {f.name: f for f in df.schema.fields}
-    return StructType([by_name[c] for c in group_cols] + _METRIC_FIELDS)
+    return [by_name[c] for c in group_cols]
+
+
+def _partial_schema(df: DataFrame, group_cols: Sequence[str]) -> StructType:
+    return StructType(_group_fields(df, group_cols) + _METRIC_FIELDS)
+
+
+def _state_schema(df: DataFrame, group_cols: Sequence[str]) -> StructType:
+    return StructType(_group_fields(df, group_cols) + _STATE_FIELDS)
 
 
 def _kernel_update_weighted(sk, vals: np.ndarray, w: np.ndarray):
@@ -247,6 +262,21 @@ def _null_safe(k):
     return k
 
 
+def _group_key(pdf: pd.DataFrame, group_cols: Sequence[str]) -> tuple:
+    # _null_safe: pandas encodes a NULL group key as NaN/NaT; emitting that
+    # into a non-float Arrow field fails the stage
+    return tuple(_null_safe(pdf[g].iloc[0]) for g in group_cols)
+
+
+def _state_frame(pdf, group_cols, schema, sk, num_partials) -> pd.DataFrame:
+    """The one-row merged-state frame a keyed applyInPandas stage returns
+    for its group (schema from _state_schema)."""
+    return pd.DataFrame(
+        [_group_key(pdf, group_cols) + (sk.to_bytes(), *_metrics_of(sk), num_partials)],
+        columns=schema.fieldNames(),
+    )
+
+
 def merge_grouped(
     partials: DataFrame,
     group_cols: Sequence[str],
@@ -258,34 +288,17 @@ def merge_grouped(
     valid because kernel merge is commutative/associative (property-tested).
     """
     group_cols = list(group_cols)
-    out_fields = [f for f in partials.schema.fields if f.name in group_cols]
-    schema = StructType(
-        out_fields
-        + [
-            StructField("state", BinaryType(), False),
-            StructField("n", LongType(), False),
-            StructField("buckets", IntegerType(), False),
-            StructField("collapses", IntegerType(), False),
-            StructField("num_partials", IntegerType(), False),
-        ]
-    )
+    if not group_cols:
+        raise ValueError("merge_grouped needs group_cols; use sketch_global for global")
+    schema = _state_schema(partials, group_cols)
 
     def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
         states = pdf["state"]
         sk = from_bytes(states.iloc[0])
         for blob in states.iloc[1:]:
             sk = sk.merge(from_bytes(blob))
-        n, b, c = _metrics_of(sk)
-        # _null_safe: pandas encodes a NULL group key as NaN/NaT; emitting
-        # that into a non-float Arrow field fails the stage
-        key_vals = [_null_safe(pdf[c_].iloc[0]) for c_ in group_cols]
-        return pd.DataFrame(
-            [tuple(key_vals) + (sk.to_bytes(), n, b, c, len(pdf))],
-            columns=[f.name for f in schema.fields],
-        )
+        return _state_frame(pdf, group_cols, schema, sk, len(pdf))
 
-    if not group_cols:
-        raise ValueError("merge_grouped needs group_cols; use sketch_global for global")
     return partials.groupBy(*group_cols).applyInPandas(merge_fn, schema=schema)
 
 
@@ -386,6 +399,10 @@ def rollup_grouping_sets(
                 all_cols.append(c)
         if len(set(s)) != len(s):
             raise ValueError(f"duplicate column in grouping set {s}")
+    # two equal sets would share one grouping_id and merge every state
+    # twice into the same cell
+    if len({frozenset(s) for s in sets}) != len(sets):
+        raise ValueError(f"duplicate grouping set in {sets}")
     missing = [c for c in all_cols if c not in states.columns]
     if missing:
         raise ValueError(f"states table lacks grouping columns {missing}")
@@ -571,6 +588,16 @@ def quantile_table(
 # per-rank fill loop (pudds.cpp:150-153) and is the scale path: per-row work
 # never leaves the JVM; shuffle moves bucket counts, not rows.
 # --------------------------------------------------------------------------
+def _log_bucket_key(v, alpha: float):
+    """Catalyst bucket key ceil(ln(v)/ln gamma) for v >= MIN_ADDRESSABLE,
+    NULL below (the zero bucket): the same libm expression the numpy kernels
+    use (non-compat path), so JVM and Arrow fills agree bucket for bucket."""
+    log_gamma = float(np.log((1.0 + alpha) / (1.0 - alpha)))
+    return F.when(
+        v >= MIN_ADDRESSABLE, F.ceil(F.log(v) / F.lit(log_gamma)).cast("long")
+    )
+
+
 def udds_bucket_counts(
     df: DataFrame, value_col: str, group_cols: Sequence[str], alpha: float
 ) -> DataFrame:
@@ -579,20 +606,34 @@ def udds_bucket_counts(
     _bkey NULL encodes the zero bucket (v < MIN_ADDRESSABLE, incl. 0 and
     negatives, matching uddsketch.cpp:176-179); NaNs are dropped.
     """
-    from ..core.uddsketch import MIN_ADDRESSABLE
-
-    gamma0 = (1.0 + alpha) / (1.0 - alpha)
-    log_gamma = float(np.log(gamma0))
     v = F.col(value_col)
-    key = F.when(
-        v >= MIN_ADDRESSABLE, F.ceil(F.log(v) / F.lit(log_gamma)).cast("long")
-    )  # NULL -> zero bucket
     return (
         df.select(*group_cols, v.alias(value_col))
         .where(~F.isnan(v.cast("double")) & v.isNotNull())
-        .groupBy(*group_cols, key.alias("_bkey"))
+        .groupBy(*group_cols, _log_bucket_key(v, alpha).alias("_bkey"))
         .agg(F.count(F.lit(1)).alias("_bcnt"))
     )
+
+
+def _udds_from_buckets(pdf: pd.DataFrame, alpha: float, m: int) -> UDDSketch:
+    """The one reader of the udds_bucket_counts table: a NULL _bkey is the
+    zero bucket, live keys are sorted, and the m bound is enforced ONCE on
+    the whole histogram. Uniform collapse composes and merge order does not
+    matter, so this is the same sketch on every path (grouped, fused,
+    global) whatever order the fill saw the rows in."""
+    keys = pdf["_bkey"]
+    live = pdf.loc[keys.notna()]
+    k = live["_bkey"].to_numpy(dtype=np.int64)
+    order = np.argsort(k, kind="stable")
+    sk = UDDSketch(
+        initial_alpha=alpha,
+        m=m,
+        zero_count=int(pdf.loc[keys.isna(), "_bcnt"].sum()),
+        keys=k[order],
+        counts=live["_bcnt"].to_numpy(dtype=np.int64)[order],
+    )
+    sk._enforce_bound()
+    return sk
 
 
 def udds_states_from_buckets(
@@ -604,38 +645,15 @@ def udds_states_from_buckets(
     the m bound happens here, in one vectorized pass.
     """
     group_cols = list(group_cols)
-    out_fields = [f for f in buckets.schema.fields if f.name in group_cols]
-    schema = StructType(
-        out_fields
-        + [
-            StructField("state", BinaryType(), False),
-            StructField("n", LongType(), False),
-            StructField("buckets", IntegerType(), False),
-            StructField("collapses", IntegerType(), False),
-            StructField("num_partials", IntegerType(), False),
-        ]
-    )
-
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = pdf["_bkey"]
-        zero = int(pdf.loc[keys.isna(), "_bcnt"].sum())
-        live = pdf.loc[keys.notna()]
-        k = live["_bkey"].to_numpy(dtype=np.int64)
-        c = live["_bcnt"].to_numpy(dtype=np.int64)
-        order = np.argsort(k, kind="stable")
-        sk = UDDSketch(
-            initial_alpha=alpha, m=m, zero_count=zero, keys=k[order], counts=c[order]
-        )
-        sk._enforce_bound()
-        key_vals = [_null_safe(pdf[g].iloc[0]) for g in group_cols]
-        return pd.DataFrame(
-            [tuple(key_vals) + (sk.to_bytes(), sk.count, sk.num_buckets, sk.num_collapses, len(pdf))],
-            columns=[f.name for f in schema.fields],
-        )
-
     if not group_cols:
         raise ValueError("udds_states_from_buckets needs group_cols; "
-                         "the global path collects the bucket table directly")
+                         "use udds_sketch_global_jvm for global")
+    schema = _state_schema(buckets, group_cols)
+
+    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
+        sk = _udds_from_buckets(pdf, alpha, m)
+        return _state_frame(pdf, group_cols, schema, sk, len(pdf))
+
     return buckets.groupBy(*group_cols).applyInPandas(assemble, schema=schema)
 
 
@@ -645,6 +663,16 @@ def sketch_grouped_jvm(
     """UDDSketch states via the JVM fill path (Tungsten hash agg fill)."""
     b = udds_bucket_counts(df, value_col, group_cols, alpha)
     return udds_states_from_buckets(b, group_cols, alpha, m)
+
+
+def udds_sketch_global_jvm(
+    df: DataFrame, value_col: str, alpha: float, m: int
+) -> UDDSketch:
+    """Global UDDSketch via the JVM fill path (driver-side object): the
+    Tungsten histogram is the only per-row work, the driver sees the
+    <=10^4-row bucket table. Bucket-identical to sketch_global at m=0."""
+    buckets = udds_bucket_counts(df, value_col, (), alpha).toPandas()
+    return _udds_from_buckets(buckets, alpha, m)
 
 
 def udds_quantile_table_jvm(
@@ -662,9 +690,8 @@ def udds_quantile_table_jvm(
     group_cols = list(group_cols)
     qs = [float(q) for q in qs]
     buckets = udds_bucket_counts(df, value_col, group_cols, alpha)
-    out_fields = [f for f in buckets.schema.fields if f.name in group_cols]
     schema = StructType(
-        out_fields
+        _group_fields(buckets, group_cols)
         + [
             StructField("q", DoubleType(), False),
             StructField("est", DoubleType(), False),
@@ -673,18 +700,10 @@ def udds_quantile_table_jvm(
     )
 
     def finalize(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = pdf["_bkey"]
-        zero = int(pdf.loc[keys.isna(), "_bcnt"].sum())
-        live = pdf.loc[keys.notna()]
-        k = live["_bkey"].to_numpy(dtype=np.int64)
-        c = live["_bcnt"].to_numpy(dtype=np.int64)
-        order = np.argsort(k, kind="stable")
-        sk = UDDSketch(initial_alpha=alpha, m=m, zero_count=zero,
-                       keys=k[order], counts=c[order])
-        sk._enforce_bound()
-        key_vals = tuple(_null_safe(pdf[g].iloc[0]) for g in group_cols)
+        sk = _udds_from_buckets(pdf, alpha, m)
+        key_vals = _group_key(pdf, group_cols)
         rows = [key_vals + (q, float(sk.quantile(q)), sk.count) for q in qs]
-        return pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        return pd.DataFrame(rows, columns=schema.fieldNames())
 
     return buckets.groupBy(*group_cols).applyInPandas(finalize, schema=schema)
 
@@ -765,29 +784,16 @@ def udds_quantiles(
         if group_cols:
             merged = sketch_grouped_jvm(df, value_col, group_cols, alpha, m)
             return quantile_table(merged, group_cols, qs, UDDSketch.from_bytes)
-        buckets = udds_bucket_counts(df, value_col, (), alpha).collect()
-        zero = sum(r["_bcnt"] for r in buckets if r["_bkey"] is None)
-        live = sorted((r["_bkey"], r["_bcnt"]) for r in buckets if r["_bkey"] is not None)
-        sk = UDDSketch(
-            initial_alpha=alpha,
-            m=m,
-            zero_count=int(zero),
-            keys=np.array([k for k, _ in live], dtype=np.int64),
-            counts=np.array([c for _, c in live], dtype=np.int64),
-        )
-        sk._enforce_bound()
-        return df.sparkSession.createDataFrame(
-            [(float(q), float(sk.quantile(q))) for q in qs], schema="q double, est double"
-        )
-    factory = lambda: UDDSketch(initial_alpha=alpha, m=m)  # noqa: E731
-    if group_cols:
-        merged = sketch_grouped(df, value_col, group_cols, factory,
-                                UDDSketch.from_bytes, pre_aggregate=pre_aggregate)
-        return quantile_table(merged, group_cols, qs, UDDSketch.from_bytes)
-    sk = sketch_global(df, value_col, factory, UDDSketch.from_bytes,
-                       pre_aggregate=pre_aggregate)
-    spark = df.sparkSession
-    return spark.createDataFrame(
+        sk = udds_sketch_global_jvm(df, value_col, alpha, m)
+    else:
+        factory = lambda: UDDSketch(initial_alpha=alpha, m=m)  # noqa: E731
+        if group_cols:
+            merged = sketch_grouped(df, value_col, group_cols, factory,
+                                    UDDSketch.from_bytes, pre_aggregate=pre_aggregate)
+            return quantile_table(merged, group_cols, qs, UDDSketch.from_bytes)
+        sk = sketch_global(df, value_col, factory, UDDSketch.from_bytes,
+                           pre_aggregate=pre_aggregate)
+    return df.sparkSession.createDataFrame(
         [(float(q), float(sk.quantile(q))) for q in qs], schema="q double, est double"
     )
 
@@ -795,32 +801,58 @@ def udds_quantiles(
 def dd_bucket_counts(
     df: DataFrame, value_col: str, group_cols: Sequence[str], alpha: float
 ) -> DataFrame:
-    """(group..., _sign, _bkey, _bcnt): JVM-side signed log-bucket histogram
-    for the DDSketch pair — the flagship Tungsten-fill architecture extended
-    to the second kernel family. _sign in {-1, 0, 1} (0 = B*, the near-zero
-    bucket: |v| < MIN_ADDRESSABLE); keys are ceil(ln(|v|)/ln gamma), the
-    same libm expression the numpy kernel uses (non-compat path), so the
-    assembled pair is bucket-identical to an Arrow fill at m=0."""
-    from ..core.uddsketch import MIN_ADDRESSABLE
-
-    gamma0 = (1.0 + alpha) / (1.0 - alpha)
-    log_gamma = float(np.log(gamma0))
+    """(group..., _sign, _bkey, _bcnt, _bmin, _bmax): JVM-side signed
+    log-bucket histogram for the DDSketch pair — the flagship Tungsten-fill
+    architecture extended to the second kernel family. _sign in {-1, 0, 1}
+    (0 = B*, the near-zero bucket: |v| < MIN_ADDRESSABLE); keys are
+    ceil(ln(|v|)/ln gamma), the same libm expression the numpy kernel uses
+    (non-compat path), so the assembled pair is bucket-identical to an Arrow
+    fill at m=0. _bmin/_bmax are the bucket's value range, computed in the
+    same aggregate: a group's min/max is the min/max over its buckets."""
     v = F.col(value_col).cast("double")
     sign = (
         F.when(F.abs(v) < MIN_ADDRESSABLE, F.lit(0))
         .when(v > 0, F.lit(1))
         .otherwise(F.lit(-1))
     )
-    key = F.when(
-        F.abs(v) >= MIN_ADDRESSABLE,
-        F.ceil(F.log(F.abs(v)) / F.lit(log_gamma)).cast("long"),
-    ).otherwise(F.lit(0))
+    key = _log_bucket_key(F.abs(v), alpha).otherwise(F.lit(0))
     return (
         df.select(*group_cols, v.alias(value_col))
         .where(~F.isnan(v) & v.isNotNull())
         .groupBy(*group_cols, sign.alias("_sign"), key.alias("_bkey"))
-        .agg(F.count(F.lit(1)).alias("_bcnt"))
+        .agg(
+            F.count(F.lit(1)).alias("_bcnt"),
+            F.min(v).alias("_bmin"),
+            F.max(v).alias("_bmax"),
+        )
     )
+
+
+def _dd_from_buckets(
+    pdf: pd.DataFrame, alpha: float, m: int, collapse_mode: str
+) -> DDSketchPair:
+    """The one reader of the dd_bucket_counts table: sign 0 is B*, each
+    signed store is sorted by key, min/max come from the per-bucket ranges
+    (NaN on an empty table), and the m bound is enforced ONCE on the
+    assembled store (see dd_sketch_global_jvm for what that means per
+    collapse mode)."""
+    sign = pdf["_sign"]
+    pos = pdf[sign == 1].sort_values("_bkey")
+    neg = pdf[sign == -1].sort_values("_bkey")
+    sk = DDSketchPair(
+        initial_alpha=alpha,
+        m=m,
+        collapse_mode=collapse_mode,
+        zero_count=int(pdf.loc[sign == 0, "_bcnt"].sum()),
+        pos_keys=pos["_bkey"].to_numpy(dtype=np.int64),
+        pos_counts=pos["_bcnt"].to_numpy(dtype=np.int64),
+        neg_keys=neg["_bkey"].to_numpy(dtype=np.int64),
+        neg_counts=neg["_bcnt"].to_numpy(dtype=np.int64),
+        min_value=float(pdf["_bmin"].min()),
+        max_value=float(pdf["_bmax"].max()),
+    )
+    sk._enforce_bound()
+    return sk
 
 
 def dd_sketch_global_jvm(
@@ -832,42 +864,16 @@ def dd_sketch_global_jvm(
 ):
     """Global DDSketchPair via the JVM histogram fill (driver-side object).
 
-    Python sees only the <=10^3-row (sign, key, count) table plus one
-    min/max row; the heavy per-row work is Tungsten hash aggregation. With
-    m=0 the result is bucket-identical to the Arrow-engine fill (pinned in
-    tests). With m>0 the bound is enforced ONCE on the assembled store (a
-    one-shot fold): for uniform mode that is the minimal-collapse result;
-    for the ddog trash-bin modes the fold history differs from an
-    incremental fill's, so use the Arrow engine when reference fold-order
-    parity matters. Not available for compat=True (glibc fast-log keys are
-    Python-side)."""
-    from ..core.ddsketch import DDSketchPair
-
-    rows = dd_bucket_counts(df, value_col, (), alpha).collect()
-    zero = sum(r["_bcnt"] for r in rows if r["_sign"] == 0)
-    pos = sorted((r["_bkey"], r["_bcnt"]) for r in rows if r["_sign"] == 1)
-    neg = sorted((r["_bkey"], r["_bcnt"]) for r in rows if r["_sign"] == -1)
-    v = F.col(value_col).cast("double")
-    mm = (
-        df.select(v.alias("v"))
-        .where(~F.isnan(F.col("v")) & F.col("v").isNotNull())
-        .agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
-        .first()
-    )
-    sk = DDSketchPair(
-        initial_alpha=alpha,
-        m=m,
-        collapse_mode=collapse_mode,
-        zero_count=int(zero),
-        pos_keys=np.array([k for k, _ in pos], dtype=np.int64),
-        pos_counts=np.array([c for _, c in pos], dtype=np.int64),
-        neg_keys=np.array([k for k, _ in neg], dtype=np.int64),
-        neg_counts=np.array([c for _, c in neg], dtype=np.int64),
-        min_value=float(mm["lo"]) if mm["lo"] is not None else float("nan"),
-        max_value=float(mm["hi"]) if mm["hi"] is not None else float("nan"),
-    )
-    sk._enforce_bound()
-    return sk
+    Python sees only the <=10^3-row (sign, key, count, min, max) table; the
+    heavy per-row work is Tungsten hash aggregation. With m=0 the result is
+    bucket-identical to the Arrow-engine fill (pinned in tests). With m>0
+    the bound is enforced ONCE on the assembled store (a one-shot fold): for
+    uniform mode that is the minimal-collapse result; for the ddog
+    trash-bin modes the fold history differs from an incremental fill's, so
+    use the Arrow engine when reference fold-order parity matters. Not
+    available for compat=True (glibc fast-log keys are Python-side)."""
+    buckets = dd_bucket_counts(df, value_col, (), alpha).toPandas()
+    return _dd_from_buckets(buckets, alpha, m, collapse_mode)
 
 
 def dd_states_grouped_jvm(
@@ -882,66 +888,18 @@ def dd_states_grouped_jvm(
     DataFrame[group..., state, n, buckets, collapses, num_partials].
 
     Same contract as sketch_grouped; per group the input is the <=10^3-row
-    signed bucket table plus a min/max row, assembled and bound-enforced in
-    one vectorized pass (see dd_sketch_global_jvm for the one-shot-fold
-    caveat on ddog modes with m > 0)."""
-    from ..core.ddsketch import DDSketchPair
-
+    signed bucket table, assembled and bound-enforced in one vectorized
+    pass (see dd_sketch_global_jvm for the one-shot-fold caveat on ddog
+    modes with m > 0). One scan, one aggregate, no join."""
     group_cols = list(group_cols)
     if not group_cols:
         raise ValueError("dd_states_grouped_jvm needs group_cols; "
                          "use dd_sketch_global_jvm for global")
     buckets = dd_bucket_counts(df, value_col, group_cols, alpha)
-    v = F.col(value_col).cast("double")
-    mm = (
-        df.select(*group_cols, v.alias("_v"))
-        .where(~F.isnan(F.col("_v")) & F.col("_v").isNotNull())
-        .groupBy(*group_cols)
-        .agg(F.min("_v").alias("_lo"), F.max("_v").alias("_hi"))
-    )
-    # null-SAFE join: a NULL group key must keep its state row (null-unsafe
-    # equality would silently drop the NULL group, diverging from the Arrow
-    # engine's _null_safe handling)
-    mm_r = mm.select(*[F.col(c).alias(f"__mm_{c}") for c in group_cols], "_lo", "_hi")
-    cond = None
-    for c in group_cols:
-        clause = buckets[c].eqNullSafe(F.col(f"__mm_{c}"))
-        cond = clause if cond is None else (cond & clause)
-    joined = buckets.join(mm_r, cond).drop(*[f"__mm_{c}" for c in group_cols])
-    out_fields = [f for f in joined.schema.fields if f.name in group_cols]
-    schema = StructType(
-        out_fields
-        + [
-            StructField("state", BinaryType(), False),
-            StructField("n", LongType(), False),
-            StructField("buckets", IntegerType(), False),
-            StructField("collapses", IntegerType(), False),
-            StructField("num_partials", IntegerType(), False),
-        ]
-    )
+    schema = _state_schema(buckets, group_cols)
 
     def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        zero = int(pdf.loc[pdf["_sign"] == 0, "_bcnt"].sum())
-        pos = pdf[pdf["_sign"] == 1].sort_values("_bkey")
-        neg = pdf[pdf["_sign"] == -1].sort_values("_bkey")
-        sk = DDSketchPair(
-            initial_alpha=alpha,
-            m=m,
-            collapse_mode=collapse_mode,
-            zero_count=zero,
-            pos_keys=pos["_bkey"].to_numpy(dtype=np.int64),
-            pos_counts=pos["_bcnt"].to_numpy(dtype=np.int64),
-            neg_keys=neg["_bkey"].to_numpy(dtype=np.int64),
-            neg_counts=neg["_bcnt"].to_numpy(dtype=np.int64),
-            min_value=float(pdf["_lo"].iloc[0]),
-            max_value=float(pdf["_hi"].iloc[0]),
-        )
-        sk._enforce_bound()
-        key_vals = [_null_safe(pdf[c].iloc[0]) for c in group_cols]
-        return pd.DataFrame(
-            [tuple(key_vals) + (sk.to_bytes(), sk.count, sk.num_buckets,
-                                sk.num_collapses + sk.pair_collapses, 1)],
-            columns=[f.name for f in schema.fields],
-        )
+        sk = _dd_from_buckets(pdf, alpha, m, collapse_mode)
+        return _state_frame(pdf, group_cols, schema, sk, 1)
 
-    return joined.groupBy(*group_cols).applyInPandas(assemble, schema=schema)
+    return buckets.groupBy(*group_cols).applyInPandas(assemble, schema=schema)

@@ -52,8 +52,7 @@ def _null_safe_broadcast_join(
     """Broadcast-join a small keyed table onto ``df`` with null-SAFE key
     equality. A plain column-name equi-join silently drops every row whose
     key is NULL even when the small table carries a NULL-key row (the agg
-    paths produce one via _null_safe) — same contract as the JVM fill's
-    join in agg.dd_states_grouped_jvm."""
+    paths produce one via _null_safe)."""
     renamed = small.select(
         *[F.col(c).alias(f"__ns_{c}") for c in keys],
         *[c for c in small.columns if c not in keys],
@@ -237,10 +236,7 @@ def with_quantile_rank(
     MIN_ADDRESSABLE, incl. negatives) get zero_mass / n; NaN/NULL values
     get NULL rank.
     """
-    import numpy as np
-
-    from ..core.uddsketch import MIN_ADDRESSABLE
-    from .agg import udds_bucket_counts
+    from .agg import _log_bucket_key, udds_bucket_counts
 
     group_cols = list(group_cols)
     hist = udds_bucket_counts(df, value_col, group_cols, alpha)
@@ -261,12 +257,8 @@ def with_quantile_rank(
         (F.sum("_bcnt").over(wk) / F.sum("_bcnt").over(wn)).alias("_qrank"),
     )
 
-    gamma0 = (1.0 + alpha) / (1.0 - alpha)
-    log_gamma = float(np.log(gamma0))
     v = F.col(value_col).cast("double")
-    key = F.when(
-        v >= MIN_ADDRESSABLE, F.ceil(F.log(v) / F.lit(log_gamma)).cast("long")
-    )
+    key = _log_bucket_key(v, alpha)
     joined = _null_safe_broadcast_join(
         df.withColumn("_bkey", F.coalesce(key, F.lit(_ZSENT))),
         cdf_tbl,

@@ -218,6 +218,23 @@ def test_multi_feature_sketch_scans_once(spark):
     assert "l_orderkey" not in read
 
 
+def test_dd_grouped_jvm_one_scan_no_join(spark):
+    """dd_states_grouped_jvm takes min/max from the bucket aggregate itself:
+    the executed plan reads its source once and has no join. A second
+    min/max aggregate joined back would show up as a Join and a second
+    Scan."""
+    from puddsketch_spark.spark.agg import dd_states_grouped_jvm
+
+    li = spark.read.parquet(f"{SF}/lineitem.parquet")
+    df = dd_states_grouped_jvm(li, "l_extendedprice", ["l_returnflag"], 0.01)
+    assert len(df.collect()) == 3
+    # the executed (AQE final) plan; the initial plan is printed after it
+    tree = _plan(df).split("\n\n")[0].split("== Initial Plan ==")[0]
+    assert "Final Plan" in tree, tree
+    assert "Join" not in tree, tree
+    assert tree.count("Scan parquet") == 1, tree
+
+
 def test_pre_aggregate_counts_before_python(spark):
     """pre_aggregate=True: the distinct-count must be a Tungsten
     HashAggregate UPSTREAM of the Python stage — if the count ran in Python

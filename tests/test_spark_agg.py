@@ -641,19 +641,102 @@ def test_dd_grouped_jvm_matches_arrow(spark):
     assert jvm["a"].zero_count == 3
 
 
-def test_dd_grouped_jvm_keeps_null_group(spark):
-    """Review regression: a NULL group key keeps its state row (null-safe
-    min/max join), matching the Arrow engine's result set."""
+@pytest.mark.parametrize(
+    "path", ["dd_states_grouped_jvm", "sketch_grouped_jvm", "udds_quantile_table_jvm"]
+)
+def test_dd_grouped_jvm_keeps_null_group(spark, path):
+    """Review regression: a NULL group key keeps its row with the right n
+    on every grouped JVM fill path, matching the Arrow engine's result set
+    (and, for DD, its min/max)."""
     from puddsketch_spark.core import DDSketchPair
-    from puddsketch_spark.spark.agg import dd_states_grouped_jvm
+    from puddsketch_spark.spark.agg import (
+        dd_states_grouped_jvm,
+        sketch_grouped_jvm,
+        udds_quantile_table_jvm,
+    )
 
     df = spark.createDataFrame(
-        [("a", 1.0), ("a", 2.0), (None, 5.0), (None, -7.0)], "grp string, v double"
+        [("a", 1.0), ("a", 2.0), (None, 5.0), (None, -7.0), (None, 3.0)],
+        "grp string, v double",
     )
-    jvm = {r.grp: DDSketchPair.from_bytes(r.state)
-           for r in dd_states_grouped_jvm(df, "v", ["grp"], alpha=0.01, m=0).collect()}
-    assert set(jvm) == {"a", None}
-    assert jvm[None].count == 2 and jvm[None].min_value == -7.0
+    if path == "dd_states_grouped_jvm":
+        jvm = {r.grp: DDSketchPair.from_bytes(r.state)
+               for r in dd_states_grouped_jvm(df, "v", ["grp"], alpha=0.01, m=0).collect()}
+        assert set(jvm) == {"a", None}
+        assert jvm[None].count == 3 and jvm[None].min_value == -7.0
+        assert jvm[None].max_value == 5.0 and jvm["a"].min_value == 1.0
+        return
+    if path == "sketch_grouped_jvm":
+        rows = sketch_grouped_jvm(df, "v", ["grp"], 0.01, 0).collect()
+    else:
+        rows = udds_quantile_table_jvm(df, "v", ["grp"], [0.5], 0.01, 0).collect()
+    n = {r.grp: r.n for r in rows}
+    assert n == {"a": 2, None: 3}
+
+
+def test_dd_collapses_metric_survives_keyed_merge(spark):
+    """Regression: a DD state's ``collapses`` counts its ddog pair folds on
+    every path. The JVM fill reported them, but a keyed merge of the same
+    state (rollup_states / merge_grouped) read only the uniform count and
+    reported 0."""
+    from puddsketch_spark.core import DDSketchPair
+    from puddsketch_spark.spark.agg import dd_states_grouped_jvm, rollup_states
+
+    rng = np.random.default_rng(5)
+    df = spark.createDataFrame([("a", float(v)) for v in rng.lognormal(3, 2, 3_000)],
+                               "g string, v double")
+    states = dd_states_grouped_jvm(df, "v", ["g"], 0.01, m=32, collapse_mode="ddog_low")
+    (direct,) = states.collect()
+    (merged,) = rollup_states(states, ["g"], DDSketchPair.from_bytes).collect()
+    assert direct.collapses == DDSketchPair.from_bytes(direct.state).pair_collapses > 0
+    assert merged.collapses == direct.collapses
+
+
+def test_udds_global_jvm_same_buckets_as_arrow(spark):
+    """The global JVM fill assembles the same UDD state as the Arrow
+    treeReduce fill over a column with zeros, negatives, NaN and NULL."""
+    from puddsketch_spark.spark.agg import udds_sketch_global_jvm
+
+    rng = np.random.default_rng(41)
+    vals = [float(v) for v in rng.lognormal(3, 1.5, 5_000)]
+    vals += [0.0] * 7 + [-2.5] * 4 + [float("nan")] * 3 + [None] * 2
+    df = spark.createDataFrame([(v,) for v in vals], "v double").repartition(4)
+    jvm = udds_sketch_global_jvm(df, "v", 0.01, 0)
+    arrow = sketch_global(df, "v", lambda: UDDSketch(initial_alpha=0.01, m=0),
+                          UDDSketch.from_bytes)
+    assert jvm.zero_count == 11
+    assert jvm.count == 5_011
+    assert jvm.same_buckets(arrow)
+
+
+def test_global_jvm_fills_on_empty_input(spark):
+    """An all-NaN/NULL column leaves an empty bucket table: both global JVM
+    fills return an empty sketch, and the DD pair keeps NaN min/max."""
+    from puddsketch_spark.spark.agg import dd_sketch_global_jvm, udds_sketch_global_jvm
+
+    df = spark.createDataFrame([(float("nan"),), (None,), (float("nan"),)], "v double")
+    udd = udds_sketch_global_jvm(df, "v", 0.01, 200)
+    assert udd.count == 0 and udd.num_buckets == 0
+    dd = dd_sketch_global_jvm(df, "v", alpha=0.01, m=0)
+    assert dd.count == 0 and dd.num_buckets == 0
+    assert np.isnan(dd.min_value) and np.isnan(dd.max_value)
+
+
+def test_merge_keys_follow_group_cols_order(spark):
+    """Regression: merging with group_cols in a different order than the
+    table's columns must keep each key value under its own column (the
+    stage used to emit values in group_cols order under a schema in table
+    order, swapping same-typed keys)."""
+    from puddsketch_spark.spark.agg import rollup_states
+
+    df = spark.createDataFrame(
+        [("x", "p", 1.0), ("x", "q", 2.0), ("y", "p", 3.0), ("y", "p", 4.0)],
+        "a string, b string, v double",
+    )
+    fac = lambda: UDDSketch(initial_alpha=0.01, m=0)  # noqa: E731
+    states = sketch_grouped(df, "v", ["a", "b"], fac, UDDSketch.from_bytes)
+    out = rollup_states(states, ["b", "a"], UDDSketch.from_bytes).collect()
+    assert {(r.a, r.b, r.n) for r in out} == {("x", "p", 1), ("x", "q", 1), ("y", "p", 2)}
 
 
 # --------------------------------------------------------------------------
@@ -769,6 +852,12 @@ def test_grouping_sets_guards_and_one_scan_plan(spark):
         rollup_grouping_sets(states, [("role", "role")], UDDSketch.from_bytes)
     with pytest.raises(ValueError, match="lacks grouping columns"):
         rollup_grouping_sets(states, [("nope",)], UDDSketch.from_bytes)
+    # equal sets would share a grouping_id and double-count the cell
+    with pytest.raises(ValueError, match="duplicate grouping set"):
+        rollup_grouping_sets(states, [("role",), ("role",)], UDDSketch.from_bytes)
+    with pytest.raises(ValueError, match="duplicate grouping set"):
+        rollup_grouping_sets(states, [("role", "tool"), ("tool", "role")],
+                             UDDSketch.from_bytes)
 
     out = rollup_grouping_sets(states, [("role",), ()], UDDSketch.from_bytes)
     plan = out._jdf.queryExecution().executedPlan().toString()
